@@ -41,21 +41,20 @@ def assemble_clusters(
     ``best_match_id``/``best_score`` is the member's strongest incident
     edge (A6, ref :1945-1964; ties broken toward the smaller partner id).
     """
+    # both orientations of every edge from ONE scan of the evidence.  A
+    # self-union of two projections is rewritten by DataFrame.union's
+    # CombineUnions (projections pushed through a union-shaped input such
+    # as the pipeline's edges stage), so that cached table was not read
+    # and its tier stages were re-planned and re-scanned instead
+    ends = F.explode(
+        F.array(
+            F.struct(F.col("id_a").alias("doc_id"), F.col("id_b").alias("_other")),
+            F.struct(F.col("id_b").alias("doc_id"), F.col("id_a").alias("_other")),
+        )
+    ).alias("_e")
     per_member = (
-        evidence_pairs.select(
-            F.col("id_a").alias("doc_id"),
-            F.col("id_b").alias("_other"),
-            "score",
-            "tier",
-        )
-        .union(
-            evidence_pairs.select(
-                F.col("id_b").alias("doc_id"),
-                F.col("id_a").alias("_other"),
-                "score",
-                "tier",
-            )
-        )
+        evidence_pairs.select(ends, "score", "tier")
+        .select("_e.doc_id", "_e._other", "score", "tier")
         .groupBy("doc_id")
         .agg(
             F.avg("score").alias("score"),

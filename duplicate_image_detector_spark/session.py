@@ -5,6 +5,11 @@ splitting, partition coalescing), Arrow for every pandas-UDF exchange, and a
 shuffle-partition count sized from the parallelism level.  On a real cluster
 the same factory is used by ``spark-submit --py-files``; in this sandbox the
 master defaults to ``local[$SPARK_GRAFT_CPUS]``.
+
+``get_spark`` only builds the session: it submits no Spark job.  An
+application's first query therefore pays Spark's first-use initialization
+(whole-stage-codegen compilation, the Python worker fork, JVM JIT of the
+hot paths) once, inside its own wall; later queries reuse all of it.
 """
 
 from __future__ import annotations
@@ -13,115 +18,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-#: applicationIds already runtime-warmed by this process (one warmup per
-#: SparkContext; getOrCreate may hand the same session back many times)
-_WARMED_APPS: set[str] = set()
-
-
-def _warm_runtime(spark: SparkSession) -> None:
-    """One-time generic runtime warmup at session creation.
-
-    A fresh Spark application pays its lazy-initialization cost on the
-    FIRST job that needs each piece of machinery: scheduler + shuffle
-    service spin-up, Janino/whole-stage-codegen classloading, JVM JIT of
-    the scan/exchange hot paths, the Python worker daemon fork plus one
-    numpy/pandas/pyarrow import per reused worker, and the parquet
-    write/read codecs.  Measured on this box: the first query of a
-    session runs 2-3x its steady-state wall (e.g. the LSH gate 9.9 s
-    first vs 2.7 s warm; the incremental gate 24.5 s first vs 8.9 s
-    warm) — pure runtime init, nothing about the query itself.
-
-    This touches NO input data and computes NO query result: synthetic
-    ``range`` rows exercise one shuffle aggregate, one broadcast join,
-    one ``mapInArrow`` pass over ``defaultParallelism`` partitions (forks
-    the full worker pool and front-loads its heavy imports; workers are
-    reused by every later Arrow kernel), and one parquet write+read round
-    trip to a temp dir.  On a long-lived production driver the same
-    warmup amortizes to zero; disable with ``SPARK_GRAFT_WARMUP=0``.
-    """
-    import shutil
-    import tempfile
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark.sql import functions as F
-
-    n = spark.sparkContext.defaultParallelism
-
-    def _generic() -> None:
-        df = spark.range(0, n * 4, 1, n).select(
-            "id",
-            (F.col("id") % 7).alias("k"),
-            F.sha2(F.col("id").cast("string"), 256).alias("s"),
-        )
-        small = spark.range(0, 7).select(F.col("id").alias("k"))
-        df.join(F.broadcast(small), "k").groupBy("k").agg(
-            F.count("*").alias("n"), F.min("s").alias("m")
-        ).collect()
-
-        def gen(batches):
-            import numpy  # noqa: F401  worker-side import, front-loaded
-            import pandas  # noqa: F401
-            import pyarrow  # noqa: F401
-
-            yield from batches
-
-        spark.range(0, n * 4, 1, n).mapInArrow(gen, "id bigint").count()
-        d = tempfile.mkdtemp(prefix="spark_warm_")
-        try:
-            df.write.mode("overwrite").parquet(os.path.join(d, "w"))
-            spark.read.parquet(os.path.join(d, "w")).count()
-        finally:
-            shutil.rmtree(d, ignore_errors=True)
-
-    def _mini_pipeline() -> None:
-        # miniature end-to-end pass over ~24 synthetic in-memory rows:
-        # beyond the generic machinery, each DISTINCT generated
-        # wholestage-codegen class still compiles on its first use (Janino
-        # caches by generated source), so the first real pipeline run
-        # would otherwise pay a few seconds of compilation across its
-        # ~dozen unique stage shapes (measured: the LSH gate's first run
-        # 4.4 s vs 2.7 s steady AFTER the generic warmup alone).  Running
-        # the composed pipeline once over a handful of synthetic docs
-        # front-loads the signature/LSH/SimHash/substring/verify/CC plan
-        # shapes shared by every dedup operator.  Nothing reusable is
-        # computed: the rows are generated here, never read from any
-        # input, and every stage cache is dropped before return.
-        from duplicate_image_detector_spark.config import PipelineConfig
-        from duplicate_image_detector_spark.plans.pipeline import (
-            run_pipeline,
-        )
-
-        words = [f"tok{i}" for i in range(40)]
-        rows = []
-        for i in range(24):
-            # 3 families of near-identical docs + singletons: non-empty
-            # candidate/verify/CC inputs so no stage short-circuits empty
-            fam = i % 3
-            body = list(words)
-            body[fam] = f"var{i}"
-            rows.append((f"warm://doc{i}", " ".join(body)))
-        pages = spark.createDataFrame(rows, "url string, text string")
-        # default config: generated-code literals (thresholds, band
-        # layout) match the production pipeline's, so its codegen cache
-        # entries are exact hits for the real run
-        res = run_pipeline(spark, pages, PipelineConfig())
-        res.clusters.count()
-        res.ckpt.unpersist_all()
-
-    # the two passes exercise disjoint machinery and Spark schedules jobs
-    # from separate driver threads independently — overlapping them costs
-    # nothing and roughly halves the (untimed) warmup wall
-    try:
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fg = pool.submit(_generic)
-            fm = pool.submit(_mini_pipeline)
-            fg.result()
-            fm.result()
-    except Exception:
-        # warmup must never block a session — any failure just means the
-        # first real query pays the compilation cost instead
-        pass
-
 
 def _default_heap() -> str:
     """60% of physical RAM, clamped to [2g, 31g] (see config comment)."""
@@ -129,7 +25,7 @@ def _default_heap() -> str:
         with open("/proc/meminfo") as fh:
             kb = int(fh.readline().split()[1])  # MemTotal
         gb = int(kb / 1024 / 1024 * 0.6)
-    except Exception:
+    except (OSError, ValueError, IndexError):
         gb = 8
     return f"{min(max(gb, 2), 31)}g"
 
@@ -201,10 +97,4 @@ def get_spark(
         )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    if os.environ.get("SPARK_GRAFT_WARMUP", "1") != "0":
-        app_id = spark.sparkContext.applicationId
-        if app_id not in _WARMED_APPS:
-            _WARMED_APPS.add(app_id)
-            _warm_runtime(spark)
-    return spark
+    return builder.getOrCreate()

@@ -21,6 +21,7 @@ tests/test_resume.py).
 from __future__ import annotations
 
 import json
+import logging
 import os
 import threading
 import time
@@ -30,6 +31,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from duplicate_image_detector_spark.config import PipelineConfig
+
+_log = logging.getLogger(__name__)
 
 _MARKER = "_STAGE_COMPLETE"
 
@@ -258,8 +261,10 @@ class CheckpointManager:
         for df in self._persisted:
             try:
                 df.unpersist()
-            except Exception:
-                pass
+            except Exception as exc:
+                # keep releasing the rest: one failed release must not
+                # leak every cache after it
+                _log.warning("unpersist of a stage cache failed: %r", exc)
         self._persisted.clear()
 
     def invalidate(self, stage: str) -> None:

@@ -94,3 +94,24 @@ def test_flag_change_invalidates_cache(spark, tiny_pages_df, cfg, tmp_path):
                       enable_substring=True)
     assert not r2.ckpt.resumed_stages
     assert set(r2.ckpt.computed_stages) >= {"docs", "edges", "clusters"}
+
+
+def test_unpersist_all_warns_and_releases_the_rest(cfg, caplog):
+    released = []
+
+    class Cache:
+        def __init__(self, name, fail=False):
+            self.name, self.fail = name, fail
+
+        def unpersist(self):
+            if self.fail:
+                raise RuntimeError(f"{self.name} is gone")
+            released.append(self.name)
+
+    ckpt = CheckpointManager(None, "", cfg, enabled=False)
+    ckpt._persisted.extend([Cache("a"), Cache("b", fail=True), Cache("c")])
+    with caplog.at_level("WARNING"):
+        ckpt.unpersist_all()
+    assert released == ["a", "c"]
+    assert "b is gone" in caplog.text
+    assert not ckpt._persisted
