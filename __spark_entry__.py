@@ -46,6 +46,7 @@ from duplicate_image_detector_spark.operators.similarity import (
 )
 from duplicate_image_detector_spark.operators.substring import substring_pairs
 from duplicate_image_detector_spark.operators.verify import verify_pairs
+from duplicate_image_detector_spark.sources.checkpoints import CacheScope
 
 CFG = PipelineConfig()
 # recall-safe banding (32x4 over the same 128 perms): candidate-miss
@@ -123,19 +124,12 @@ def clear_caches() -> None:
     vs 0.8 s after a forced GC).  A cold-cache boundary that leaves the
     predecessor's garbage in the JVM is not cold; the GC belongs to the
     boundary, not to either query's cost."""
-    for cache in (_SIG_CACHE, _PAIRS_CACHE, _VERIFIED_CACHE):
-        for df in cache.values():
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-        cache.clear()
-    for df in _GATE_RESULTS:
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    _GATE_RESULTS.clear()
+    with CacheScope() as memo:
+        for cache in (_SIG_CACHE, _PAIRS_CACHE, _VERIFIED_CACHE):
+            for df in cache.values():
+                memo.adopt(df)
+            cache.clear()
+    _GATE_RESULTS.close()
     try:
         spark = SparkSession.getActiveSession()
         if spark is not None:
@@ -206,17 +200,15 @@ def _verified_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         from concurrent.futures import ThreadPoolExecutor
 
         sig.count()
-        # deferred-cache mode: the arms hand their bucket caches over via
-        # the registry; they stay resident until clear_caches (the gate
-        # result is only materialized by the caller's action)
-        reg: list = []
+        # the arms' bucket caches stay resident until clear_caches (the
+        # gate result is only materialized by the caller's action)
         with ThreadPoolExecutor(max_workers=2) as pool:
             ham_f = pool.submit(
                 simhash_hamming_pairs, sig.select("doc_id", "simhash"), CFG,
-                cache_registry=reg,
+                scope=_GATE_RESULTS,
             )
             lsh_f = pool.submit(
-                lsh_candidate_pairs, sig, CFG_GATE, cache_registry=reg
+                lsh_candidate_pairs, sig, CFG_GATE, scope=_GATE_RESULTS
             )
             ham, lshc = ham_f.result(), lsh_f.result()
         cands = (
@@ -227,7 +219,6 @@ def _verified_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         df = verify_pairs(cands, sig, CFG_GATE).persist(
             StorageLevel.MEMORY_AND_DISK
         )
-        _GATE_RESULTS.extend(reg)
         _VERIFIED_CACHE[sf_dir] = df
     return df
 
@@ -263,7 +254,7 @@ def q_near_dup_clusters_id128(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     d128 = docs.select(sid.alias("doc_id"), "text")
     sig = compute_signatures(d128, CFG_GATE)
-    cands = lsh_candidate_pairs(sig, CFG_GATE)
+    cands = _GATE_RESULTS.adopt(lsh_candidate_pairs(sig, CFG_GATE))
     ver = verify_pairs(cands, sig, CFG_GATE)
     cc = connected_components(ver.select("id_a", "id_b"))
     m = docs.select(sid.alias("sid"), F.col("doc_id").alias("orig"))
@@ -303,14 +294,12 @@ def q_pipeline_clusters_exclude_exact(spark: SparkSession, sf_dir: str) -> DataF
     return _pipeline_clusters(spark, sf_dir, exclude_exact=True)
 
 
-_GATE_RESULTS: list[DataFrame] = []
+_GATE_RESULTS = CacheScope()
 
 
 def _pipeline_clusters(
     spark: SparkSession, sf_dir: str, exclude_exact: bool
 ) -> DataFrame:
-    from pyspark.storagelevel import StorageLevel
-
     from duplicate_image_detector_spark.plans.pipeline import run_pipeline
 
     docs = _docs(spark, sf_dir)
@@ -328,11 +317,10 @@ def _pipeline_clusters(
     # materialize the (tiny) gate result, then drop the ~10 stage caches
     # the disabled checkpoint manager created — the driver runs all 37
     # gates in ONE session and would otherwise accumulate them all
-    out = out.persist(StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    _GATE_RESULTS.append(out)
-    res.ckpt.unpersist_all()
-    return out
+    try:
+        return _GATE_RESULTS.persist(out)
+    finally:
+        res.ckpt.unpersist_all()
 
 
 def q_incremental_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -356,7 +344,7 @@ def q_incremental_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         hash_kind="md5",
         old_fanin_cap=None,  # oracle-exact mode: the gate's SQL is uncapped
     )
-    _GATE_RESULTS.append(out)  # operator-persisted; released by clear_caches
+    _GATE_RESULTS.adopt(out)  # operator-persisted; released by clear_caches
     return out.select("id_a", "id_b", "jaccard")
 
 
@@ -381,11 +369,10 @@ def q_incremental_cluster_update(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sig_old = compute_signatures(old, CFG_GATE, include_shingles=False,
                                  hash_kind="md5")
+    old_lsh = _GATE_RESULTS.adopt(lsh_candidate_pairs(sig_old, CFG_GATE))
+    old_ham = _GATE_RESULTS.adopt(_shp(sig_old.select("doc_id", "simhash"), CFG))
     old_cands = (
-        lsh_candidate_pairs(sig_old, CFG_GATE)
-        .unionByName(
-            _shp(sig_old.select("doc_id", "simhash"), CFG).select("id_a", "id_b")
-        )
+        old_lsh.unionByName(old_ham.select("id_a", "id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
     from duplicate_image_detector_spark.operators.signatures import (
@@ -405,7 +392,7 @@ def q_incremental_cluster_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     new_pairs = incremental_near_pairs(
         old, delta, CFG_GATE, hash_kind="md5", old_fanin_cap=None
     )
-    _GATE_RESULTS.append(new_pairs)
+    _GATE_RESULTS.adopt(new_pairs)
     return incremental_update_clusters(
         old_clusters, new_pairs.select("id_a", "id_b")
     ).select("doc_id", "cluster_id")
@@ -423,8 +410,6 @@ def q_daily_loop_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator incremental gates never exercise end-to-end."""
     import shutil
     import tempfile
-
-    from pyspark.storagelevel import StorageLevel
 
     from duplicate_image_detector_spark.plans.daily import DailyDedup
 
@@ -448,10 +433,7 @@ def q_daily_loop_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = withorig.join(lab, "cluster_id").select(
             F.col("orig").alias("doc_id"), F.col("cmin").alias("cluster_id")
         )
-        out = out.persist(StorageLevel.MEMORY_AND_DISK)
-        out.count()
-        _GATE_RESULTS.append(out)
-        return out
+        return _GATE_RESULTS.persist(out)
     finally:
         shutil.rmtree(state, ignore_errors=True)
 
@@ -461,7 +443,7 @@ def q_simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pigeonhole banding (4 x 15-bit chunk equi-joins + bit_count verify) —
     identical output to the all-pairs crossJoin, no cartesian node."""
     sig = _sig_gate(spark, sf_dir).select("doc_id", "simhash")
-    return simhash_hamming_pairs(sig, CFG)
+    return _GATE_RESULTS.adopt(simhash_hamming_pairs(sig, CFG))
 
 
 def q_integrated_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -492,15 +474,12 @@ def q_integrated_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_substring_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # deferred-cache mode: the caller's single action materializes the
-    # candidate set and the verify in one job; the handed-over fp-bucket
-    # cache is released at the next clear_caches (gate-results pattern)
-    reg: list = []
-    out = substring_pairs(
-        _docs(spark, sf_dir), CFG, cache_registry=reg
+    # the caller's single action materializes the candidate set and the
+    # verify in one job; the fp-bucket cache is released at the next
+    # clear_caches
+    return substring_pairs(
+        _docs(spark, sf_dir), CFG, scope=_GATE_RESULTS
     ).select("id_a", "id_b")
-    _GATE_RESULTS.extend(reg)
-    return out
 
 
 def q_best_pair_per_member(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -64,6 +64,7 @@ from duplicate_image_detector_spark.operators.simhash import (
     simhash_key_rows,
 )
 from duplicate_image_detector_spark.operators.verify import verify_pairs
+from duplicate_image_detector_spark.sources.checkpoints import CacheScope
 
 
 #: max delta-side distinct bucket keys the cross arms will HINT into a
@@ -231,150 +232,146 @@ def incremental_near_pairs(
     index tables are ~17 narrow rows/doc, the natural durable form of
     LSH state at 10^12 docs).
     """
-    from pyspark.storagelevel import StorageLevel
-
     if old_fanin_cap == "auto":
         old_fanin_cap = cfg.max_bucket
 
-    own_sig_old = existing_sig is None
-    sig_old = (
-        existing_sig
-        if existing_sig is not None
-        else compute_signatures(
-            old_docs, cfg, include_shingles=False, hash_kind=hash_kind
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        # persisted: without a precomputed store the old-corpus signature
-        # pass (the most expensive Python kernel here) is referenced by
-        # THREE subtrees — the band cross arm, the chunk cross arm, and
-        # the verify-side simhash union — and would execute three times
-    )
-    sig_new = compute_signatures(
-        delta_docs, cfg, include_shingles=False, hash_kind=hash_kind
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    n_delta = sig_new.count()
-
-    # new x new: the standard capped generators over the delta alone.
-    # The pigeonhole layout follows the DELTA's size (both sides of this
-    # self-join are built here) — a multi-million-doc delta would otherwise pay
-    # ~Δ²/2^15 random chunk collisions, the measured shape of the 2x-
-    # delta marginal-wall blowup in BENCH/scaling_incremental.json.  The
-    # cross arm below is NOT free to do this: its old side is the
-    # materialized index, whose layout is pinned by cfg.simhash_n_chunks.
-    # The two arms are independent sub-DAGs over the already-materialized
-    # sig_new — their eager bucket-stats/output actions overlap from
-    # concurrent driver threads (guide §2.6).
-    from concurrent.futures import ThreadPoolExecutor
-
-    # deferred-cache mode (see lsh_candidate_pairs): arm outputs stay
-    # lazy; the candidate-union action below materializes all four arms
-    # in ONE job, and the bucket caches release after it
-    reg: list = []
-    with ThreadPoolExecutor(max_workers=3) as arm_pool:
-        nn_lsh_f = arm_pool.submit(
-            lsh_candidate_pairs, sig_new, cfg, cache_registry=reg
-        )
-        nn_ham_f = arm_pool.submit(
-            lambda: simhash_hamming_pairs(
-                sig_new.select("doc_id", "simhash"), cfg,
-                max_bucket=cfg.max_bucket,
-                n_chunks=pick_simhash_layout(n_delta, cfg),
-                cache_registry=reg,
+    # one scope owns every cache below: released (LIFO) on return or
+    # error; the verified output is handed over to the caller
+    with CacheScope() as caches:
+        sig_old = (
+            existing_sig
+            if existing_sig is not None
+            else caches.persist(
+                compute_signatures(
+                    old_docs, cfg, include_shingles=False, hash_kind=hash_kind
+                ),
+                eager=False,
             )
+            # persisted: without a precomputed store the old-corpus
+            # signature pass (the most expensive Python kernel here) is
+            # referenced by THREE subtrees — the band cross arm, the chunk
+            # cross arm, and the verify-side simhash union — and would
+            # execute three times
         )
-        if own_sig_old:
-            # eager fill of the old-signature cache, overlapped with the
-            # within-delta arms (which only need sig_new): a lazy persist
-            # would let the two cross-arm subtrees of the candidate action
-            # race to compute the same partitions before the cache fills
-            arm_pool.submit(sig_old.count)
-        nn_lsh, nn_ham = nn_lsh_f.result(), nn_ham_f.result()
+        sig_new = caches.persist(
+            compute_signatures(
+                delta_docs, cfg, include_shingles=False, hash_kind=hash_kind
+            ),
+            eager=False,
+        )
+        n_delta = sig_new.count()
 
-    # new x old: delta buckets joined against the old band/chunk tables
-    old_bands = (
-        existing_bands
-        if existing_bands is not None
-        else explode_bands(sig_old, cfg)
-    )
-    old_chunks = (
-        existing_chunks
-        if existing_chunks is not None
-        else _chunk_rows(sig_old, cfg)
-    )
-    # upper bounds on the delta's distinct bucket keys (rows x keys-per-
-    # row) gate the broadcast hints — the chunk index layout is pinned by
-    # cfg (it must match the materialized old index), never delta-sized
-    n_chunk_keys = n_delta * (
-        cfg.simhash_n_chunks
-        if cfg.simhash_n_chunks is not None
-        else cfg.simhash_hamming_max + 1
-    )
-    no_lsh = _delta_cross_candidates(
-        explode_bands(sig_new, cfg),
-        old_bands,
-        ["band_id", "band_hash"],
-        old_fanin_cap,
-        approx_delta_keys=n_delta * cfg.bands,
-    )
-    no_ham = _delta_cross_candidates(
-        _chunk_rows(sig_new, cfg),
-        old_chunks,
-        ["chunk_id", "val"],
-        old_fanin_cap,
-        hamming_max=cfg.simhash_hamming_max,
-        approx_delta_keys=n_chunk_keys,
-    )
+        # new x new: the standard capped generators over the delta alone.
+        # The pigeonhole layout follows the DELTA's size (both sides of
+        # this self-join are built here) — a multi-million-doc delta would
+        # otherwise pay ~Δ²/2^15 random chunk collisions, the measured
+        # shape of the 2x-delta marginal-wall blowup in
+        # BENCH/scaling_incremental.json.  The cross arm below is NOT free
+        # to do this: its old side is the materialized index, whose layout
+        # is pinned by cfg.simhash_n_chunks.  The two arms are independent
+        # sub-DAGs over the already-materialized sig_new — their eager
+        # bucket-stats actions overlap from concurrent driver threads
+        # (guide §2.6); the candidate-union action below materializes all
+        # four arms in ONE job, and the arm caches release after it.
+        from concurrent.futures import ThreadPoolExecutor
 
-    cands = (
-        nn_lsh.select("id_a", "id_b")
-        .unionByName(nn_ham.select("id_a", "id_b"))
-        .unionByName(no_lsh)
-        .unionByName(no_ham)
-        .dropDuplicates(["id_a", "id_b"])
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    cands.count()
-    for c in reg:
-        c.unpersist()
+        with CacheScope() as arms:
+            with ThreadPoolExecutor(max_workers=3) as arm_pool:
+                nn_lsh_f = arm_pool.submit(
+                    lsh_candidate_pairs, sig_new, cfg, scope=arms
+                )
+                nn_ham_f = arm_pool.submit(
+                    lambda: simhash_hamming_pairs(
+                        sig_new.select("doc_id", "simhash"), cfg,
+                        max_bucket=cfg.max_bucket,
+                        n_chunks=pick_simhash_layout(n_delta, cfg),
+                        scope=arms,
+                    )
+                )
+                if existing_sig is None:
+                    # eager fill of the old-signature cache, overlapped
+                    # with the within-delta arms (which only need
+                    # sig_new): a lazy persist would let the two cross-arm
+                    # subtrees of the candidate action race to compute the
+                    # same partitions before the cache fills
+                    arm_pool.submit(sig_old.count)
+                nn_lsh, nn_ham = nn_lsh_f.result(), nn_ham_f.result()
 
-    # verify: shingle sets + simhash for candidate endpoints only, drawn
-    # from the union corpus (old text is read just for touched docs)
-    all_docs = old_docs.select("doc_id", "text").unionByName(
-        delta_docs.select("doc_id", "text")
-    )
-    cand_ids = cands.select(F.col("id_a").alias("doc_id")).union(
-        cands.select(F.col("id_b").alias("doc_id"))
-    )
-    sets = shingle_sets_for(all_docs, cand_ids, cfg, hash_kind=hash_kind)
-    sig_union = sig_old.select("doc_id", "simhash").unionByName(
-        sig_new.select("doc_id", "simhash")
-    )
-    # materialize the endpoint payload ONCE: score_pairs joins it twice
-    # (id_a side + id_b side), and without this the corpus text scan +
-    # shingling behind ``sets`` would execute twice — measured 2x the
-    # whole verify wall at 500k docs.  O(|candidate endpoints|) rows.
-    # Measured NEGATIVE result (kept for the record): folding this pass
-    # into the verify action by broadcasting the payload (the
-    # plans/pipeline.py PAYLOAD_BROADCAST_PAIRS pattern) won ~0.1 s at
-    # sf0.1 but consistently LOST ~1.5 s at 10x corpus size in
-    # interleaved A/Bs — the broadcast-stage round-trip grows with the
-    # corpus-side scan inside this subtree, while the barrier it saves is
-    # fixed.  The persisted path is the scale-correct default here; the
-    # pipeline keeps the fold because there it also removes a whole
-    # checkpoint-stage barrier.
-    payload = sig_union.join(sets, "doc_id").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    payload.count()
-    out = verify_pairs(cands, payload, cfg).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    out.count()
-    payload.unpersist()
-    cands.unpersist()
-    sig_new.unpersist()
-    if own_sig_old:
-        sig_old.unpersist()
-    return out
+            # new x old: delta buckets joined against the old band/chunk
+            # tables
+            old_bands = (
+                existing_bands
+                if existing_bands is not None
+                else explode_bands(sig_old, cfg)
+            )
+            old_chunks = (
+                existing_chunks
+                if existing_chunks is not None
+                else _chunk_rows(sig_old, cfg)
+            )
+            # upper bounds on the delta's distinct bucket keys (rows x
+            # keys-per-row) gate the broadcast hints — the chunk index
+            # layout is pinned by cfg (it must match the materialized old
+            # index), never delta-sized
+            n_chunk_keys = n_delta * (
+                cfg.simhash_n_chunks
+                if cfg.simhash_n_chunks is not None
+                else cfg.simhash_hamming_max + 1
+            )
+            no_lsh = _delta_cross_candidates(
+                explode_bands(sig_new, cfg),
+                old_bands,
+                ["band_id", "band_hash"],
+                old_fanin_cap,
+                approx_delta_keys=n_delta * cfg.bands,
+            )
+            no_ham = _delta_cross_candidates(
+                _chunk_rows(sig_new, cfg),
+                old_chunks,
+                ["chunk_id", "val"],
+                old_fanin_cap,
+                hamming_max=cfg.simhash_hamming_max,
+                approx_delta_keys=n_chunk_keys,
+            )
+
+            cands = caches.persist(
+                nn_lsh.select("id_a", "id_b")
+                .unionByName(nn_ham.select("id_a", "id_b"))
+                .unionByName(no_lsh)
+                .unionByName(no_ham)
+                .dropDuplicates(["id_a", "id_b"])
+            )
+
+        # verify: shingle sets + simhash for candidate endpoints only,
+        # drawn from the union corpus (old text is read just for touched
+        # docs)
+        all_docs = old_docs.select("doc_id", "text").unionByName(
+            delta_docs.select("doc_id", "text")
+        )
+        cand_ids = cands.select(F.col("id_a").alias("doc_id")).union(
+            cands.select(F.col("id_b").alias("doc_id"))
+        )
+        sets = shingle_sets_for(all_docs, cand_ids, cfg, hash_kind=hash_kind)
+        sig_union = sig_old.select("doc_id", "simhash").unionByName(
+            sig_new.select("doc_id", "simhash")
+        )
+        # materialize the endpoint payload ONCE: score_pairs joins it twice
+        # (id_a side + id_b side), and without this the corpus text scan +
+        # shingling behind ``sets`` would execute twice — measured 2x the
+        # whole verify wall at 500k docs.  O(|candidate endpoints|) rows.
+        # Measured NEGATIVE result (kept for the record): folding this pass
+        # into the verify action by broadcasting the payload (the
+        # plans/pipeline.py PAYLOAD_BROADCAST_PAIRS pattern) won ~0.1 s at
+        # sf0.1 but consistently LOST ~1.5 s at 10x corpus size in
+        # interleaved A/Bs — the broadcast-stage round-trip grows with the
+        # corpus-side scan inside this subtree, while the barrier it saves
+        # is fixed.  The persisted path is the scale-correct default here;
+        # the pipeline keeps the fold because there it also removes a whole
+        # checkpoint-stage barrier.
+        payload = caches.persist(sig_union.join(sets, "doc_id"))
+        return caches.detach(
+            caches.persist(verify_pairs(cands, payload, cfg))
+        )
 
 
 def touched_member_ids(

@@ -25,11 +25,14 @@ engine therefore computes bucket sizes first and routes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Sequence
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from duplicate_image_detector_spark.config import PipelineConfig
 from duplicate_image_detector_spark.functions.hashing import band_structs_col
+from duplicate_image_detector_spark.sources.checkpoints import CacheScope
 
 
 def explode_bands(sig: DataFrame, cfg: PipelineConfig) -> DataFrame:
@@ -40,67 +43,113 @@ def explode_bands(sig: DataFrame, cfg: PipelineConfig) -> DataFrame:
     ).select("doc_id", F.col("b.band_id"), F.col("b.band_hash"))
 
 
-def lsh_candidate_pairs(
-    sig: DataFrame,
-    cfg: PipelineConfig,
-    cache_registry: list | None = None,
+def capped_bucket_pairs(
+    rows: DataFrame,
+    keys: Sequence[str],
+    max_bucket: int | None,
+    carry: Sequence[str] = (),
+    where: Column | None = None,
+    pair_cols: dict[str, Column] | None = None,
+    scope: CacheScope | None = None,
 ) -> DataFrame:
-    """signatures -> distinct candidate (id_a, id_b), id_a < id_b.
+    """(doc_id, *keys, *carry) bucket rows -> distinct (id_a < id_b) pairs
+    of docs sharing a bucket — the capped self-join behind every
+    candidate generator (LSH bands, SimHash chunks, substring
+    fingerprints).
 
-    Bucket stats come from a partial-aggregating ``groupBy`` joined back to
-    the band rows — NOT a ``Window.partitionBy(band_id, band_hash)``: the
-    window routes every row of a hot bucket (a 50M-row boilerplate bucket at
-    webtext scale) through ONE task just to be counted, while the groupBy
-    counts map-side in parallel and the (small: multi-member buckets only)
-    stats table broadcasts back under AQE.
+    Bucket stats come from a partial-aggregating ``groupBy`` joined back
+    to the rows — NOT a ``Window.partitionBy(*keys)``: the window routes
+    every row of a hot bucket (a 50M-row boilerplate bucket at webtext
+    scale) through ONE task just to be counted, while the groupBy counts
+    map-side in parallel and the (small: multi-member buckets only) stats
+    table broadcasts back under AQE.  The joined multi-member rows are
+    cached eagerly so both self-join sides read the cache instead of
+    recomputing the explode + stats join (measured 45s -> ~8s at 500k
+    docs for the LSH bands).
 
-    The joined band rows for multi-member buckets — a tiny fraction of the
-    corpus — are persisted eagerly so the within-bucket self-join reads a
-    cached table instead of recomputing the band explode + stats join on
-    both sides (measured 45s -> ~8s at 500k docs); the cache is dropped
-    before returning (the output itself is persisted instead, and callers
-    that checkpoint it may ``unpersist()`` afterwards).
+    Buckets of size <= ``max_bucket`` self-join in full; every member of
+    a larger bucket pairs with the bucket's min doc_id only (module
+    docstring).  ``max_bucket=None`` caps nothing.
+
+    ``carry`` columns reach the pair as ``<c>_a`` / ``<c>_b`` — the
+    pivot's from the stats aggregate (``min_by(<c>, doc_id)``), so the
+    pivot arm needs no join back.  The pair rows are then projected to
+    ``id_a, id_b`` plus ``pair_cols`` (derived from the carried columns)
+    and filtered by ``where`` BEFORE the dedup.
+
+    With a ``scope`` the bucket cache is registered there and the output
+    is returned lazy: the caller materializes it (e.g. one union over
+    several arms) and closing the scope releases the cache.  Without one
+    the output is persisted and counted here and the bucket cache is
+    released before returning; the caller owns the output cache.
     """
-    from pyspark.storagelevel import StorageLevel
+    if scope is None:
+        with CacheScope() as own:
+            out = own.persist(
+                capped_bucket_pairs(
+                    rows, keys, max_bucket, carry, where, pair_cols, own
+                )
+            )
+            return own.detach(out)
 
-    bands = explode_bands(sig, cfg)
+    keys = list(keys)
     stats = (
-        bands.groupBy("band_id", "band_hash")
+        rows.groupBy(*keys)
         .agg(
             F.count("*").alias("bucket_size"),
             F.min("doc_id").alias("pivot_id"),
+            *[F.min_by(c, "doc_id").alias(f"_pivot_{c}") for c in carry],
         )
         .where(F.col("bucket_size") >= 2)
     )
-    multi = bands.join(stats, ["band_id", "band_hash"]).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    multi.count()  # eager: both self-join sides read the cache
+    multi = scope.persist(rows.join(stats, keys))
+    out_cols = [F.col("id_a"), F.col("id_b")] + [
+        col.alias(name) for name, col in (pair_cols or {}).items()
+    ]
 
-    normal = multi.where(F.col("bucket_size") <= cfg.max_bucket)
-    left = normal.select("band_id", "band_hash", F.col("doc_id").alias("id_a"))
-    right = normal.select("band_id", "band_hash", F.col("doc_id").alias("id_b"))
-    joined = left.join(right, ["band_id", "band_hash"]).where(
-        F.col("id_a") < F.col("id_b")
-    )
+    def side(df: DataFrame, s: str) -> DataFrame:
+        return df.select(
+            *keys,
+            F.col("doc_id").alias(f"id_{s}"),
+            *[F.col(c).alias(f"{c}_{s}") for c in carry],
+        )
 
-    pivoted = (
-        multi.where(F.col("bucket_size") > cfg.max_bucket)
-        .where(F.col("doc_id") != F.col("pivot_id"))
-        .select(F.col("pivot_id").alias("id_a"), F.col("doc_id").alias("id_b"))
+    normal = multi if max_bucket is None else multi.where(
+        F.col("bucket_size") <= max_bucket
     )
+    pairs = (
+        side(normal, "a")
+        .join(side(normal, "b"), keys)
+        .where(F.col("id_a") < F.col("id_b"))
+        .select(*out_cols)
+    )
+    if max_bucket is not None:
+        pivoted = (
+            multi.where(F.col("bucket_size") > max_bucket)
+            .where(F.col("doc_id") != F.col("pivot_id"))
+            .select(
+                F.col("pivot_id").alias("id_a"),
+                F.col("doc_id").alias("id_b"),
+                *[F.col(f"_pivot_{c}").alias(f"{c}_a") for c in carry],
+                *[F.col(c).alias(f"{c}_b") for c in carry],
+            )
+            .select(*out_cols)
+        )
+        pairs = pairs.union(pivoted)
+    if where is not None:
+        pairs = pairs.where(where)
+    return pairs.dropDuplicates(["id_a", "id_b"])
 
-    out = joined.select("id_a", "id_b").union(pivoted).dropDuplicates(
-        ["id_a", "id_b"]
+
+def lsh_candidate_pairs(
+    sig: DataFrame,
+    cfg: PipelineConfig,
+    scope: CacheScope | None = None,
+) -> DataFrame:
+    """signatures -> distinct candidate (id_a, id_b), id_a < id_b: docs
+    sharing a (band_id, band_hash) bucket, capped at ``cfg.max_bucket``
+    (``capped_bucket_pairs``, which also documents ``scope``)."""
+    return capped_bucket_pairs(
+        explode_bands(sig, cfg), ["band_id", "band_hash"], cfg.max_bucket,
+        scope=scope,
     )
-    if cache_registry is not None:
-        # deferred mode: the caller unions/filters this output and
-        # materializes ONCE — skipping the per-arm persist+count saves a
-        # whole job; the band cache is handed to the caller to release
-        # after that materialization
-        cache_registry.append(multi)
-        return out
-    out = out.persist(StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    multi.unpersist()
-    return out

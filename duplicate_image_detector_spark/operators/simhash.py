@@ -47,6 +47,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from duplicate_image_detector_spark.config import PipelineConfig
+from duplicate_image_detector_spark.operators.lsh import capped_bucket_pairs
+from duplicate_image_detector_spark.sources.checkpoints import CacheScope
 
 
 def _chunks_col(simhash: Column, n_chunks: int, chunk_bits: int) -> Column:
@@ -176,7 +178,7 @@ def simhash_hamming_pairs(
     id_col: str = "doc_id",
     simhash_col: str = "simhash",
     n_chunks: int | None = None,
-    cache_registry: list | None = None,
+    scope: CacheScope | None = None,
 ) -> DataFrame:
     """sig(doc_id, simhash) -> exact (id_a, id_b, hamming), id_a < id_b,
     for every pair with Hamming distance <= cfg.simhash_hamming_max.
@@ -186,81 +188,20 @@ def simhash_hamming_pairs(
     pair with the bucket's min doc_id only (pipeline mode; see module
     docstring).  ``n_chunks`` picks the pigeonhole layout
     (``simhash_key_rows``); every layout yields the same output, only the
-    candidate volume differs.
+    candidate volume differs.  ``scope``: see ``capped_bucket_pairs``.
     """
-    from pyspark.storagelevel import StorageLevel
-
-    d = cfg.simhash_hamming_max
     base = sig.select(
         F.col(id_col).alias("doc_id"), F.col(simhash_col).alias("simhash")
     )
-    ex = simhash_key_rows(base, cfg, n_chunks=n_chunks)
-
-    stats = (
-        ex.groupBy("chunk_id", "val")
-        .agg(F.count("*").alias("bucket_size"), F.min("doc_id").alias("pivot_id"))
-        .where(F.col("bucket_size") >= 2)
+    hamming = F.bit_count(
+        F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))
+    ).cast("int")
+    return capped_bucket_pairs(
+        simhash_key_rows(base, cfg, n_chunks=n_chunks),
+        ["chunk_id", "val"],
+        max_bucket,
+        carry=["simhash"],
+        where=F.col("hamming") <= cfg.simhash_hamming_max,
+        pair_cols={"hamming": hamming},
+        scope=scope,
     )
-    multi = ex.join(stats, ["chunk_id", "val"]).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    multi.count()  # eager: both self-join sides read the cache
-
-    hi = max_bucket if max_bucket is not None else (1 << 62)
-    normal = multi.where(F.col("bucket_size") <= hi)
-    left = normal.select(
-        "chunk_id",
-        "val",
-        F.col("doc_id").alias("id_a"),
-        F.col("simhash").alias("_sa"),
-    )
-    right = normal.select(
-        "chunk_id",
-        "val",
-        F.col("doc_id").alias("id_b"),
-        F.col("simhash").alias("_sb"),
-    )
-    hamming = F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb"))).cast("int")
-    joined = (
-        left.join(right, ["chunk_id", "val"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", hamming.alias("hamming"))
-        .where(F.col("hamming") <= d)  # verify BEFORE the pair dedup
-    )
-
-    if max_bucket is not None:
-        piv = (
-            multi.where(F.col("bucket_size") > hi)
-            .where(F.col("doc_id") != F.col("pivot_id"))
-            .select(
-                F.col("pivot_id").alias("id_a"),
-                F.col("doc_id").alias("id_b"),
-                F.col("simhash").alias("_sb"),
-            )
-            .join(
-                base.select(
-                    F.col("doc_id").alias("id_a"), F.col("simhash").alias("_sa")
-                ),
-                "id_a",
-            )
-            .select(
-                "id_a",
-                "id_b",
-                F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb")))
-                .cast("int")
-                .alias("hamming"),
-            )
-            .where(F.col("hamming") <= d)
-        )
-        joined = joined.union(piv)
-
-    out = joined.dropDuplicates(["id_a", "id_b"])
-    if cache_registry is not None:
-        # deferred mode (see lsh_candidate_pairs): caller materializes the
-        # union once and releases the chunk cache afterwards
-        cache_registry.append(multi)
-        return out
-    out = out.persist(StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    multi.unpersist()
-    return out

@@ -44,6 +44,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from duplicate_image_detector_spark.config import PipelineConfig
+from duplicate_image_detector_spark.operators.lsh import capped_bucket_pairs
+from duplicate_image_detector_spark.sources.checkpoints import CacheScope
 
 if TYPE_CHECKING:
     import pandas as pd
@@ -199,48 +201,12 @@ def fingerprint_docs(
 def fingerprint_candidate_pairs(
     fps: DataFrame,
     cfg: PipelineConfig,
-    cache_registry: list | None = None,
+    scope: CacheScope | None = None,
 ) -> DataFrame:
-    """(doc_id, fp) -> candidate (id_a < id_b), bucket-capped like LSH.
-
-    Same skew-safe shape as ``lsh_candidate_pairs``: partial-aggregating
-    ``groupBy`` bucket stats joined back (no hot-key single-task window),
-    eager cache of the multi-member rows for the two self-join sides,
-    cache dropped before returning (output persisted instead).
-    """
-    from pyspark.storagelevel import StorageLevel
-
-    stats = (
-        fps.groupBy("fp")
-        .agg(
-            F.count("*").alias("bucket_size"),
-            F.min("doc_id").alias("pivot_id"),
-        )
-        .where(F.col("bucket_size") >= 2)  # singleton fps never join
-    )
-    multi = fps.join(stats, "fp").persist(StorageLevel.MEMORY_AND_DISK)
-    multi.count()  # eager: both self-join sides read the cache
-    normal = multi.where(F.col("bucket_size") <= cfg.max_bucket)
-    left = normal.select("fp", F.col("doc_id").alias("id_a"))
-    right = normal.select("fp", F.col("doc_id").alias("id_b"))
-    joined = left.join(right, "fp").where(F.col("id_a") < F.col("id_b"))
-    pivoted = (
-        multi.where(F.col("bucket_size") > cfg.max_bucket)
-        .where(F.col("doc_id") != F.col("pivot_id"))
-        .select(F.col("pivot_id").alias("id_a"), F.col("doc_id").alias("id_b"))
-    )
-    out = joined.select("id_a", "id_b").union(pivoted).dropDuplicates(
-        ["id_a", "id_b"]
-    )
-    if cache_registry is not None:
-        # deferred mode (see lsh_candidate_pairs): the caller materializes
-        # the verified output once and releases the fp cache afterwards
-        cache_registry.append(multi)
-        return out
-    out = out.persist(StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    multi.unpersist()
-    return out
+    """(doc_id, fp) -> candidate (id_a < id_b) pairs of docs sharing a
+    fingerprint, bucket-capped like LSH (``capped_bucket_pairs``, which
+    also documents ``scope``)."""
+    return capped_bucket_pairs(fps, ["fp"], cfg.max_bucket, scope=scope)
 
 
 def py_longest_common_substring(a: str, b: str) -> int:
@@ -300,20 +266,18 @@ def substring_pairs(
     cfg: PipelineConfig,
     id_col: str = "doc_id",
     text_col: str = "text",
-    cache_registry: list | None = None,
+    scope: CacheScope | None = None,
 ) -> DataFrame:
     """docs -> verified (id_a, id_b, span_len, tier='substring') pairs
     sharing an exact span >= cfg.substring_min_len chars.
 
-    ``cache_registry``: deferred-cache mode (see
-    ``fingerprint_candidate_pairs``) — the candidate set is not
-    materialized here; the caller materializes the returned output once
-    and then unpersists the handed-over internal caches."""
+    With a ``scope`` the candidate set stays lazy and its bucket cache is
+    registered there (``capped_bucket_pairs``)."""
     src = docs.select(
         F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
     ).where(F.col("text").isNotNull())
     cands = fingerprint_candidate_pairs(
-        fingerprint_docs(src, cfg), cfg, cache_registry=cache_registry
+        fingerprint_docs(src, cfg), cfg, scope=scope
     )
     return verify_span_pairs(cands, src, cfg)
 

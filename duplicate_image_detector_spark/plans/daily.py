@@ -98,6 +98,7 @@ from duplicate_image_detector_spark.operators.substring import (
     verify_span_pairs,
 )
 from duplicate_image_detector_spark.sources.checkpoints import (
+    CacheScope,
     CheckpointManager,
 )
 from duplicate_image_detector_spark.sources.cluster_store import ClusterStore
@@ -492,9 +493,7 @@ class DailyDedup:
         n_delta = docs.count()
         n_delta_fps = substr_fps.count() if substr_fps is not None else 0
 
-        def _pairs() -> DataFrame:
-            from pyspark.storagelevel import StorageLevel
-
+        def _pair_union(arms: CacheScope) -> DataFrame:
             # exact tier: within-delta stars + delta keys vs per-key old
             # pivots (exactly one old row per distinct TOUCHED key — the
             # old store is semi-filtered to the delta's keys before the
@@ -518,14 +517,16 @@ class DailyDedup:
             empty_docs = self.spark.createDataFrame(
                 [], "doc_id bigint, text string"
             )
-            near = incremental_near_pairs(
-                old_docs if old_docs is not None else empty_docs,
-                docs,
-                cfg,
-                existing_sig=old_sigs,
-                hash_kind=hash_kind,
-                existing_bands=old_bands,
-                existing_chunks=old_chunks,
+            near = arms.adopt(
+                incremental_near_pairs(
+                    old_docs if old_docs is not None else empty_docs,
+                    docs,
+                    cfg,
+                    existing_sig=old_sigs,
+                    hash_kind=hash_kind,
+                    existing_bands=old_bands,
+                    existing_chunks=old_chunks,
+                )
             )
             parts.append(
                 near.select(
@@ -536,7 +537,7 @@ class DailyDedup:
 
             # substring tier: delta fp self-join + delta-vs-store fp join
             if substr_fps is not None:
-                cands = fingerprint_candidate_pairs(substr_fps, cfg)
+                cands = fingerprint_candidate_pairs(substr_fps, cfg, scope=arms)
                 if old_fps is not None:
                     cands = cands.unionByName(
                         _delta_cross_candidates(
@@ -564,12 +565,13 @@ class DailyDedup:
             out = parts[0]
             for p in parts[1:]:
                 out = out.unionByName(p)
-            out = out.dropDuplicates(["id_a", "id_b", "tier"]).persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-            out.count()
-            near.unpersist()
-            return out
+            return out.dropDuplicates(["id_a", "id_b", "tier"])
+
+        def _pairs() -> DataFrame:
+            # the near result and the fp bucket cache live until the
+            # pairs union is materialized
+            with CacheScope() as arms:
+                return arms.detach(arms.persist(_pair_union(arms)))
 
         pairs = ckpt.run("pairs", _pairs)
 

@@ -49,7 +49,10 @@ from duplicate_image_detector_spark.operators.signatures import (
 )
 from duplicate_image_detector_spark.operators.substring import substring_pairs
 from duplicate_image_detector_spark.operators.verify import verify_pairs
-from duplicate_image_detector_spark.sources.checkpoints import CheckpointManager
+from duplicate_image_detector_spark.sources.checkpoints import (
+    CacheScope,
+    CheckpointManager,
+)
 
 
 def pipeline_extra_key(
@@ -147,6 +150,23 @@ def run_pipeline(
         if checkpoint_dir
         else CheckpointManager(spark, "", cfg, enabled=False, extra_key=extra_key)
     )
+    try:
+        return _run_stages(
+            ckpt, pages, cfg, checkpoint_dir, use_md5_hash, enable_substring,
+            exclude_exact, mode, table_format, parallel_tiers,
+        )
+    except BaseException:
+        # a failed run hands back no result to release later: drop every
+        # stage cache now (a no-op for durable checkpoints)
+        ckpt.unpersist_all()
+        raise
+
+
+def _run_stages(
+    ckpt: CheckpointManager, pages: DataFrame, cfg: PipelineConfig,
+    checkpoint_dir: str | None, use_md5_hash: bool, enable_substring: bool,
+    exclude_exact: bool, mode: str, table_format: str, parallel_tiers: bool,
+) -> PipelineResult:
     hash_kind = "md5" if use_md5_hash else "poly"
 
     def _docs() -> DataFrame:
@@ -213,15 +233,12 @@ def run_pipeline(
         exact = None
         near_docs = docs
 
-    def _candidates(signatures: DataFrame) -> DataFrame:
+    def _candidates(signatures: DataFrame, arms: CacheScope) -> DataFrame:
         # near-tier candidates cover BOTH admission arms (verify.py): LSH
         # band buckets for the Jaccard arm, SimHash pigeonhole banding for
         # the Hamming arm.  Both generators are sub-quadratic and
-        # bucket-capped; their union is deduped once here.  The operator-
-        # level caches are released after the union is materialized — the
-        # stage itself is persisted/checkpointed by the manager.
-        from pyspark.storagelevel import StorageLevel
-
+        # bucket-capped; their union is deduped once here and materialized
+        # by the stage in one job.
         from duplicate_image_detector_spark.operators.simhash import (
             pick_simhash_layout,
             simhash_hamming_pairs,
@@ -230,19 +247,12 @@ def run_pipeline(
         # the two candidate arms are independent sub-DAGs over the already-
         # materialized signatures stage — submit them from concurrent
         # driver threads (guide §2.6, same pattern as the tier overlap):
-        # each arm runs two eager actions (bucket-stats cache + output
-        # cache), and overlapping hides one arm's scheduling latency under
-        # the other's.  Output and caching behavior are unchanged.
+        # each arm fills its bucket-stats cache eagerly, and overlapping
+        # hides one arm's scheduling latency under the other's.
         from concurrent.futures import ThreadPoolExecutor
 
-        # deferred-output mode: each arm materializes only its bucket-stats
-        # cache (the self-join's two sides must read a filled cache); the
-        # arm outputs stay lazy and the UNION below materializes both in
-        # one job instead of one per arm
-        reg: list = []
-
         def _lsh_arm() -> DataFrame:
-            return lsh_candidate_pairs(signatures, cfg, cache_registry=reg)
+            return lsh_candidate_pairs(signatures, cfg, scope=arms)
 
         def _ham_arm() -> DataFrame:
             # both sides of the pigeonhole self-join are built here, so the
@@ -255,22 +265,16 @@ def run_pipeline(
                 signatures.select("doc_id", "simhash"), cfg,
                 max_bucket=cfg.max_bucket,
                 n_chunks=pick_simhash_layout(signatures.count(), cfg),
-                cache_registry=reg,
+                scope=arms,
             )
 
         with ThreadPoolExecutor(max_workers=2) as arm_pool:
             lsh_f = arm_pool.submit(_lsh_arm)
             ham_f = arm_pool.submit(_ham_arm)
             lshc, ham = lsh_f.result(), ham_f.result()
-        out = (
-            lshc.unionByName(ham.select("id_a", "id_b"))
-            .dropDuplicates(["id_a", "id_b"])
-            .persist(StorageLevel.MEMORY_AND_DISK)
+        return lshc.unionByName(ham.select("id_a", "id_b")).dropDuplicates(
+            ["id_a", "id_b"]
         )
-        n_cand_holder.append(out.count())
-        for c in reg:
-            c.unpersist()
-        return out
 
     def _shingle_sets(candidates: DataFrame) -> DataFrame:
         # shingle sets exist only for candidate docs (ref re-reads pixels in
@@ -327,11 +331,6 @@ def run_pipeline(
             )
         return verify_pairs(candidates, sig_for_verify, cfg)
 
-    # candidate count observed inside _candidates (disabled-checkpoint
-    # mode); a durable resume skips _candidates, so fall back to counting
-    # the stage table (parquet metadata, cheap)
-    n_cand_holder: list[int] = []
-
     def _near_chain() -> tuple[DataFrame, DataFrame]:
         # the near tier's four stages are a sequential chain; the chain as
         # a whole is one branch of the parallel region.  slim signatures:
@@ -343,14 +342,20 @@ def run_pipeline(
                 near_docs, cfg, include_shingles=False, hash_kind=hash_kind
             ),
         )
-        candidates = ckpt.run("candidates", lambda: _candidates(signatures))
+        with CacheScope() as arms:
+            # the arms' bucket caches live until the stage is materialized
+            candidates = ckpt.run(
+                "candidates", lambda: _candidates(signatures, arms)
+            )
         from duplicate_image_detector_spark.operators.verify import (
             PAYLOAD_BROADCAST_PAIRS,
         )
 
-        n_cand = (
-            n_cand_holder[0] if n_cand_holder else candidates.count()
-        )
+        # a durable resume counted nothing: count the stage table
+        # (parquet metadata, cheap)
+        n_cand = ckpt.stage_rows.get("candidates")
+        if n_cand is None:
+            n_cand = candidates.count()
         # verify joins the shingle-set payload on BOTH pair sides.  Small
         # candidate sets broadcast it: exchange reuse evaluates the
         # payload once inside the verify job, so the stage itself can stay
@@ -388,16 +393,11 @@ def run_pipeline(
     if enable_substring:
 
         def _substring_stage() -> DataFrame:
-            # deferred-cache mode: the fp-bucket cache is released only
-            # after the stage materializes the verified span pairs
-            reg: list = []
-            out = ckpt.run(
-                "substring",
-                lambda: substring_pairs(near_docs, cfg, cache_registry=reg),
-            )
-            for c in reg:
-                c.unpersist()
-            return out
+            with CacheScope() as arms:
+                return ckpt.run(
+                    "substring",
+                    lambda: substring_pairs(near_docs, cfg, scope=arms),
+                )
 
         branches["substring"] = _substring_stage
 

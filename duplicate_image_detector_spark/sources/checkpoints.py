@@ -42,6 +42,54 @@ STAGE_METRICS_SCHEMA = (
 )
 
 
+class CacheScope:
+    """The one owner of a set of DataFrame caches: ``close`` (also the
+    ``with`` exit, error paths included) releases every cache registered
+    by ``persist`` or ``adopt``, LIFO, logging a failed release and
+    carrying on; ``detach`` hands one over to the caller first."""
+
+    def __init__(self) -> None:
+        self._caches: list[DataFrame] = []
+
+    def __enter__(self) -> "CacheScope":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.close()
+
+    def __len__(self) -> int:
+        return len(self._caches)
+
+    def persist(self, df: DataFrame, eager: bool = True) -> DataFrame:
+        """Persist ``df`` (MEMORY_AND_DISK) and own it; ``eager`` fills
+        the cache now, so consumers that read it twice (both sides of a
+        self-join) never race to compute it."""
+        from pyspark.storagelevel import StorageLevel
+
+        df = self.adopt(df.persist(StorageLevel.MEMORY_AND_DISK))
+        if eager:
+            df.count()
+        return df
+
+    def adopt(self, df: DataFrame) -> DataFrame:
+        self._caches.append(df)
+        return df
+
+    def detach(self, df: DataFrame) -> DataFrame:
+        self._caches = [c for c in self._caches if c is not df]
+        return df
+
+    def close(self) -> None:
+        while self._caches:
+            df = self._caches.pop()
+            try:
+                df.unpersist()
+            except Exception as exc:
+                # keep releasing the rest: one failed release must not
+                # leak every cache after it
+                _log.warning("unpersist of a cache failed: %r", exc)
+
+
 @dataclass
 class CheckpointManager:
     spark: SparkSession
@@ -64,10 +112,10 @@ class CheckpointManager:
     # are absent (nothing was counted for them).
     stage_rows: dict[str, int] = field(default_factory=dict)
     _metrics: list[dict] = field(default_factory=list)
-    # stage DataFrames this manager itself persisted (disabled mode only);
-    # callers that run many pipelines in one session call unpersist_all()
-    # once the final result is materialized
-    _persisted: list[DataFrame] = field(default_factory=list)
+    # stage caches this manager owns (disabled mode only); callers that
+    # run many pipelines in one session call unpersist_all() once the
+    # final result is materialized
+    _scope: CacheScope = field(default_factory=CacheScope, repr=False)
     # run() is called from concurrent tier threads (plans/pipeline.py
     # parallel_tiers): stage tables/paths are disjoint per stage name, but
     # the metrics buffer + its append-mode table are shared — serialize them
@@ -138,19 +186,16 @@ class CheckpointManager:
             # join branches of the first action race to compute the same
             # stage 2-3x before the cache fills (measured 120s vs 35s on
             # the sf0.1 pipeline).
-            # Operators that return an already-persisted DataFrame (e.g. the
-            # candidate-pair generators) are not persisted a second time.
-            from pyspark.storagelevel import StorageLevel
-
+            # An operator that returns an already-persisted DataFrame is
+            # adopted, not persisted a second time: with no durable copy
+            # the manager owns every stage cache until unpersist_all().
             self.computed_stages.append(stage)
             df = fn()
-            if not (df.storageLevel.useMemory or df.storageLevel.useDisk):
-                df = df.persist(StorageLevel.MEMORY_AND_DISK)
-                if eager:
-                    self.stage_rows[stage] = df.count()
-            # track operator-persisted stages too: with no durable copy the
-            # manager owns every cache until unpersist_all()
-            self._persisted.append(df)
+            if df.storageLevel.useMemory or df.storageLevel.useDisk:
+                return self._scope.adopt(df)
+            df = self._scope.persist(df, eager=False)
+            if eager:
+                self.stage_rows[stage] = df.count()
             return df
         path = self.stage_path(stage)
         if self.is_complete(stage):
@@ -258,14 +303,7 @@ class CheckpointManager:
         Call after the pipeline's final output is materialized (persisted
         or collected) — otherwise downstream actions recompute the DAG.
         """
-        for df in self._persisted:
-            try:
-                df.unpersist()
-            except Exception as exc:
-                # keep releasing the rest: one failed release must not
-                # leak every cache after it
-                _log.warning("unpersist of a stage cache failed: %r", exc)
-        self._persisted.clear()
+        self._scope.close()
 
     def invalidate(self, stage: str) -> None:
         if self.table_format == "iceberg":

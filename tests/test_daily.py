@@ -309,3 +309,17 @@ def test_geometric_fold_policy_bounds_rewrites(spark, tmp_path):
     hist = manifest["fold_history"]
     total_read = sum(h["folded"] + sum(h["merged_spans"]) for h in hist)
     assert total_read <= n_days * (int(math.log2(n_days)) + 2)
+
+
+def test_run_day_leaves_no_cache(spark, tiny_corpus, cfg, tmp_path):
+    """run_day releases every cache it makes: the live cached-RDD count
+    is the same before and after each day (first day and cross-day)."""
+    pages_pd, _ = tiny_corpus
+    pages = spark.createDataFrame(pages_pd[["url", "text"]])
+    day_of = F.pmod(F.xxhash64("url"), F.lit(2))
+    dd = DailyDedup(spark, str(tmp_path / "state"), cfg)
+    jsc = spark.sparkContext._jsc
+    for d in range(2):
+        before = jsc.getPersistentRDDs().size()
+        dd.run_day(pages.where(day_of == d), f"d{d}")
+        assert jsc.getPersistentRDDs().size() == before

@@ -7,10 +7,20 @@ no cartesian node, and exercise a pathological hot bucket.
 
 from __future__ import annotations
 
+import random
+from collections import Counter, defaultdict
+from dataclasses import replace
+from itertools import combinations
+
+import pytest
 from pyspark.sql import functions as F
 
 from duplicate_image_detector_spark.config import PipelineConfig
 from duplicate_image_detector_spark.functions.text import shingles_col, words_col
+from duplicate_image_detector_spark.operators.lsh import (
+    explode_bands,
+    lsh_candidate_pairs,
+)
 from duplicate_image_detector_spark.operators.ngram import ngram_jaccard_pairs
 from duplicate_image_detector_spark.operators.signatures import (
     compute_signatures,
@@ -18,6 +28,10 @@ from duplicate_image_detector_spark.operators.signatures import (
 )
 from duplicate_image_detector_spark.operators.simhash import (
     simhash_hamming_pairs,
+    simhash_key_rows,
+)
+from duplicate_image_detector_spark.operators.substring import (
+    fingerprint_candidate_pairs,
 )
 
 
@@ -139,30 +153,104 @@ def test_simhash_pigeonhole_matches_brute_force(spark, tiny_pages_df, cfg):
     assert len(want) > 0
 
 
-def test_simhash_hot_bucket_skew(spark, cfg):
-    # 400 fingerprints identical on chunk 0 (low 15 bits) but far apart
-    # overall (hamming >> max): the hot chunk bucket produces quadratic
-    # candidates, all rejected by the verify — plus 5 genuine neighbors.
+def _capped_oracle(key_rows, cap, keep=None):
+    """The capped rule in Python: (doc_id, key) rows -> every pair within
+    a bucket of size <= cap, the (bucket min, member) pivot pairs of a
+    larger bucket, each kept only if ``keep(id_a, id_b)``."""
+    buckets = defaultdict(set)
+    for doc, key in key_rows:
+        buckets[key].add(doc)
+    want = set()
+    for members in buckets.values():
+        if len(members) <= cap:
+            pairs = combinations(sorted(members), 2)
+        else:
+            pivot = min(members)
+            pairs = ((pivot, m) for m in members if m != pivot)
+        want |= {p for p in pairs if keep is None or keep(*p)}
+    return want
+
+
+def _lsh_case(spark, cfg):
+    rng = random.Random(5)
+    rows = []
+    for d in range(40):
+        mh = [rng.randrange(1 << 30) for _ in range(cfg.n_perm)]
+        if d < 8:
+            mh[:8] = range(8)  # hot band-0 bucket: 8 members > cap
+        if 8 <= d < 11:
+            mh[8:16] = [5] * 8  # band-1 bucket of 3: full pairs
+        if d in (2, 30):
+            mh[24:32] = [1] * 8  # a hot-bucket member also pairs normally
+        rows.append((d * 7 + 3, mh))
+    sig = spark.createDataFrame(rows, "doc_id long, minhash array<bigint>")
+    key_rows = [
+        (r["doc_id"], (r["band_id"], r["band_hash"]))
+        for r in explode_bands(sig, cfg).collect()
+    ]
+    return lsh_candidate_pairs(sig, cfg), key_rows, None
+
+
+def _simhash_case(spark, cfg):
+    # 400 fingerprints identical on chunk 0 (low 15 bits) but mostly far
+    # apart (hamming >> max): the hot chunk bucket produces quadratic
+    # candidates, nearly all rejected by the verify — plus 3 genuine
+    # neighbors inside it and a close pair in buckets of their own
     base = 0b101010101010101
     far = [(i, (i << 20) | base) for i in range(400)]  # differ in high bits
     near = [(1000 + i, (7 << 20) | base | (1 << (15 + i))) for i in range(3)]
-    sig = spark.createDataFrame(far + near, "doc_id long, simhash long")
-    out = simhash_hamming_pairs(sig, cfg).collect()
-    got = {(r["id_a"], r["id_b"]) for r in out}
-    # brute-force oracle in python
-    rows = far + near
-    want = {
-        (min(i, j), max(i, j))
-        for ii, (i, si) in enumerate(rows)
-        for j, sj in rows[ii + 1 :]
-        if bin(si ^ sj).count("1") <= cfg.simhash_hamming_max
-    }
-    assert got == want
+    x = random.Random(9).randrange(1 << cfg.simhash_bits)
+    pair = [(2000, x), (2001, x ^ 1), (2002, x ^ (1 << 40))]
+    rows = far + near + pair
+    sig = spark.createDataFrame(rows, "doc_id long, simhash long")
+    sims = dict(rows)
 
-    # capped mode: hot buckets pivot-pair; output must be a subset that
-    # still covers the pivot's own neighbors
-    capped = simhash_hamming_pairs(sig, cfg, max_bucket=50).collect()
-    assert {(r["id_a"], r["id_b"]) for r in capped} <= want
+    def within(a, b):
+        return bin(sims[a] ^ sims[b]).count("1") <= cfg.simhash_hamming_max
+
+    # uncapped: exact, identical to the brute-force all-pairs oracle
+    exact_df = simhash_hamming_pairs(sig, cfg)
+    exact = {(r["id_a"], r["id_b"]) for r in exact_df.collect()}
+    exact_df.unpersist()
+    assert exact == {
+        (min(a, b), max(a, b)) for a, b in combinations(sims, 2) if within(a, b)
+    }
+    key_rows = [
+        (r["doc_id"], (r["chunk_id"], r["val"]))
+        for r in simhash_key_rows(sig, cfg).collect()
+    ]
+    capped = simhash_hamming_pairs(sig, cfg, max_bucket=cfg.max_bucket)
+    return capped, key_rows, within
+
+
+def _fingerprint_case(spark, cfg):
+    rng = random.Random(3)
+    fps = [(d, rng.randrange(40)) for d in range(80)] + [
+        (d, 999) for d in range(10)  # hot fingerprint: 10 members > cap
+    ]
+    df = spark.createDataFrame(fps, "doc_id long, fp long")
+    return fingerprint_candidate_pairs(df, cfg), fps, None
+
+
+@pytest.mark.parametrize(
+    "case", [_lsh_case, _simhash_case, _fingerprint_case],
+    ids=["lsh", "simhash", "fingerprint"],
+)
+def test_capped_bucket_pairs_match_oracle(spark, cfg, case):
+    """Each candidate generator applies the capped rule exactly: full
+    pairs within buckets of size <= max_bucket, pivot pairs above it (and
+    the Hamming filter for SimHash) — equality, not a subset."""
+    capped_cfg = replace(cfg, max_bucket=3)
+    out, key_rows, keep = case(spark, capped_cfg)
+    got = {(r["id_a"], r["id_b"]) for r in out.collect()}
+    out.unpersist()
+    sizes = Counter(key for _, key in key_rows)
+    # the fixture forces both paths: a full-pair bucket and a pivot bucket
+    assert 2 <= min(n for n in sizes.values() if n >= 2) <= 3
+    assert max(sizes.values()) > 3
+    want = _capped_oracle(key_rows, 3, keep)
+    assert got == want
+    assert len(want) > 0
 
 
 def test_pick_simhash_layout_crossover():

@@ -10,11 +10,19 @@ from __future__ import annotations
 
 from dataclasses import replace
 
+import pytest
+
+import duplicate_image_detector_spark.operators.simhash as simhash_mod
+import duplicate_image_detector_spark.plans.pipeline as pipeline_mod
+from duplicate_image_detector_spark.operators.lsh import lsh_candidate_pairs
 from duplicate_image_detector_spark.plans.pipeline import (
     pipeline_extra_key,
     run_pipeline,
 )
-from duplicate_image_detector_spark.sources.checkpoints import CheckpointManager
+from duplicate_image_detector_spark.sources.checkpoints import (
+    CacheScope,
+    CheckpointManager,
+)
 
 
 def _cluster_set(result):
@@ -96,7 +104,7 @@ def test_flag_change_invalidates_cache(spark, tiny_pages_df, cfg, tmp_path):
     assert set(r2.ckpt.computed_stages) >= {"docs", "edges", "clusters"}
 
 
-def test_unpersist_all_warns_and_releases_the_rest(cfg, caplog):
+def test_cache_scope_close_warns_and_releases_the_rest(caplog):
     released = []
 
     class Cache:
@@ -108,10 +116,49 @@ def test_unpersist_all_warns_and_releases_the_rest(cfg, caplog):
                 raise RuntimeError(f"{self.name} is gone")
             released.append(self.name)
 
-    ckpt = CheckpointManager(None, "", cfg, enabled=False)
-    ckpt._persisted.extend([Cache("a"), Cache("b", fail=True), Cache("c")])
+    scope = CacheScope()
+    for cache in (Cache("c"), Cache("b", fail=True), Cache("a")):
+        scope.adopt(cache)
     with caplog.at_level("WARNING"):
-        ckpt.unpersist_all()
+        scope.close()  # LIFO: a, b, c
     assert released == ["a", "c"]
     assert "b is gone" in caplog.text
-    assert not ckpt._persisted
+    assert len(scope) == 0
+
+
+def _cached_rdds(spark):
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def _boom(*args, **kwargs):
+    raise RuntimeError("injected crash")
+
+
+def test_failed_run_releases_every_cache(spark, tiny_pages_df, cfg, monkeypatch):
+    """A stage that raises leaves no stage cache behind (disabled mode)."""
+    monkeypatch.setattr(pipeline_mod, "connected_components", _boom)
+    before = _cached_rdds(spark)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run_pipeline(spark, tiny_pages_df, cfg)
+    assert _cached_rdds(spark) == before
+
+
+def test_failed_arm_releases_the_other_arms_cache(
+    spark, tiny_pages_df, cfg, monkeypatch
+):
+    """The SimHash arm raises while the LSH arm has already filled its
+    band cache: the candidate scope releases that cache too."""
+    live_in_scope = []
+
+    def lsh_arm(sig, cfg, scope=None):
+        out = lsh_candidate_pairs(sig, cfg, scope=scope)
+        live_in_scope.append(len(scope))
+        return out
+
+    monkeypatch.setattr(pipeline_mod, "lsh_candidate_pairs", lsh_arm)
+    monkeypatch.setattr(simhash_mod, "simhash_hamming_pairs", _boom)
+    before = _cached_rdds(spark)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run_pipeline(spark, tiny_pages_df, cfg)
+    assert live_in_scope == [1]  # the band cache existed when the arm failed
+    assert _cached_rdds(spark) == before
