@@ -199,6 +199,7 @@ def connected_components(
 
     prev_sig: tuple[int, int] | None = None
     cached: list[DataFrame] = []
+    truncated = True  # cur reads the round-0 parquet
     for it in range(max_iter):
         # persist every round: the star steps reference their input 3-4
         # times (union + window/groupBy + join) and would otherwise
@@ -207,14 +208,19 @@ def connected_components(
         # ``truncate_every`` rounds keep the *plan* bounded too.
         nxt = _small_star(_large_star(cur)).persist(StorageLevel.MEMORY_AND_DISK)
         cached.append(nxt)
-        if (it + 1) % truncate_every == 0:
+        truncated = (it + 1) % truncate_every == 0
+        if truncated:
             nxt = _truncate(nxt, work_dir, it + 1)
         sig = _checksum(nxt)
         cur = nxt
         if sig == prev_sig:
             break
         prev_sig = sig
-    for df in cached[:-1]:
+    if not truncated:
+        # the returned frame reads parquet, never a round cache, so every
+        # round cache can be released here
+        cur = _truncate(cur, work_dir, len(cached))
+    for df in cached:
         df.unpersist()
     # star forest: u -> v (= component min); roots appear only on the v side
     members = cur.select(F.col("u").alias("doc_id"), F.col("v").alias("cluster_id"))

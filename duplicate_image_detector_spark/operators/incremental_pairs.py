@@ -348,8 +348,11 @@ def incremental_near_pairs(
         all_docs = old_docs.select("doc_id", "text").unionByName(
             delta_docs.select("doc_id", "text")
         )
-        cand_ids = cands.select(F.col("id_a").alias("doc_id")).union(
-            cands.select(F.col("id_b").alias("doc_id"))
+        # both endpoints from one scan of the cands cache (the pipeline's
+        # shingle_sets idiom; measured job-neutral here, where a Project
+        # over each arm already kept the union from missing the cache)
+        cand_ids = cands.select(
+            F.explode(F.array("id_a", "id_b")).alias("doc_id")
         )
         sets = shingle_sets_for(all_docs, cand_ids, cfg, hash_kind=hash_kind)
         sig_union = sig_old.select("doc_id", "simhash").unionByName(

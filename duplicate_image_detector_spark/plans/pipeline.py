@@ -238,7 +238,12 @@ def _run_stages(
         # band buckets for the Jaccard arm, SimHash pigeonhole banding for
         # the Hamming arm.  Both generators are sub-quadratic and
         # bucket-capped; their union is deduped once here and materialized
-        # by the stage in one job.
+        # by the stage in one job.  The dedup is an aggregate, not a
+        # dropDuplicates: each arm already ends in a distinct-over-union,
+        # and the CombineUnions rewrite that every later union over this
+        # lineage runs (the edges stage) flattens a distinct nested over
+        # another — the rewritten plan then misses the stage caches and
+        # re-runs both arms.
         from duplicate_image_detector_spark.operators.simhash import (
             pick_simhash_layout,
             simhash_hamming_pairs,
@@ -272,8 +277,11 @@ def _run_stages(
             lsh_f = arm_pool.submit(_lsh_arm)
             ham_f = arm_pool.submit(_ham_arm)
             lshc, ham = lsh_f.result(), ham_f.result()
-        return lshc.unionByName(ham.select("id_a", "id_b")).dropDuplicates(
-            ["id_a", "id_b"]
+        return (
+            lshc.unionByName(ham.select("id_a", "id_b"))
+            .groupBy("id_a", "id_b")
+            .count()
+            .select("id_a", "id_b")
         )
 
     def _shingle_sets(candidates: DataFrame) -> DataFrame:
@@ -283,8 +291,12 @@ def _run_stages(
             shingle_sets_for,
         )
 
-        cand_ids = candidates.select(F.col("id_a").alias("doc_id")).union(
-            candidates.select(F.col("id_b").alias("doc_id"))
+        # both endpoints from ONE scan of the candidates stage (the
+        # assemble_clusters idiom): a self-union of two projections runs
+        # CombineUnions over the candidates lineage, and the rewritten
+        # plan misses that cache and re-runs the candidate arms
+        cand_ids = candidates.select(
+            F.explode(F.array("id_a", "id_b")).alias("doc_id")
         )
         return shingle_sets_for(near_docs, cand_ids, cfg, hash_kind=hash_kind)
 

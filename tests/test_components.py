@@ -94,6 +94,23 @@ def test_cc_random_graph(spark):
     assert got == expected
 
 
+def test_cc_distributed_path_releases_round_caches(spark):
+    """The distributed star rounds release every round cache: the returned
+    frame reads the converged forest from parquet, so repeated calls leave
+    the session's cached-RDD count where it was."""
+    edges = [(i, i + 1) for i in range(1, 41)]
+    df = spark.createDataFrame(edges, "id_a long, id_b long")
+    want = py_dsu_components(edges)
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    live = []
+    for _ in range(3):
+        out = connected_components(df, small_graph_edges=0)
+        assert {r["doc_id"]: r["cluster_id"] for r in out.collect()} == want
+        live.append(jsc.getPersistentRDDs().size())
+    assert live == [before] * 3
+
+
 def test_cc_edge_count_hint_paths_identical(spark):
     """edge_count_hint is an upper bound: a small bound proves the driver
     path without a count job, a large/absent bound falls back to

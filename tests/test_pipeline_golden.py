@@ -285,3 +285,26 @@ def test_payload_broadcast_gate_pipeline_identity(
     assert pairs_a, "non-vacuous"
     assert pairs_a == pairs_b
     assert clus_a == clus_b
+
+
+def test_pipeline_op_reads_its_stage_caches(spark, tiny_pages_df, cfg):
+    """One disabled-mode op plus one action on its clusters stays under a
+    Spark job budget: every stage reads its upstream stage caches instead
+    of re-running the candidate arms.  A union over a lineage that holds a
+    nested distinct-over-union is flattened by CombineUnions and misses
+    those caches; with this session (local[4], 8 shuffle partitions,
+    1m broadcast threshold) that shape measured 115 jobs per op, the
+    explode/aggregate shapes 65, identical over 3 repeats."""
+    tracker = spark.sparkContext.statusTracker()
+
+    def last_job_id():
+        return max(tracker.getJobIdsForGroup(None), default=-1)
+
+    before = last_job_id()
+    res = run_pipeline(spark, tiny_pages_df, cfg)
+    try:
+        res.clusters.count()
+    finally:
+        res.ckpt.unpersist_all()
+    jobs = last_job_id() - before
+    assert jobs <= 80, f"{jobs} Spark jobs for one pipeline op"

@@ -162,3 +162,26 @@ def test_failed_arm_releases_the_other_arms_cache(
         run_pipeline(spark, tiny_pages_df, cfg)
     assert live_in_scope == [1]  # the band cache existed when the arm failed
     assert _cached_rdds(spark) == before
+
+
+def test_unpersist_all_leaves_only_the_downstream_cache(spark, tiny_pages_df, cfg):
+    """Three runs in a row, each persisting a result downstream of the
+    stage caches and reading it again after unpersist_all: the live
+    cached-RDD count is the same after every run (only the downstream
+    cache is added), so releasing the stages never leaves a cache that no
+    owner can release."""
+    before = _cached_rdds(spark)
+    live = []
+    for _ in range(3):
+        res = run_pipeline(spark, tiny_pages_df, cfg)
+        sizes = res.clusters.groupBy("cluster_id").count().persist()
+        try:
+            want = sorted(map(tuple, sizes.collect()))
+            res.ckpt.unpersist_all()
+            assert sorted(map(tuple, sizes.collect())) == want
+            live.append(_cached_rdds(spark))
+        finally:
+            res.ckpt.unpersist_all()
+            sizes.unpersist()
+    assert live == [before + 1] * 3
+    assert _cached_rdds(spark) == before
