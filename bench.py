@@ -234,14 +234,8 @@ def run_flagship_worker() -> None:
     pages = docs.select(
         F.concat(F.lit("doc://"), F.col("doc_id")).alias("url"), "text"
     )
-    # A/B knob for the tier-overlap measurement: SPARK_GRAFT_SERIAL_TIERS=1
-    # pins the historical serial stage order (pipeline parallel_tiers=False)
-    serial = os.environ.get("SPARK_GRAFT_SERIAL_TIERS", "") == "1"
     t0 = time.time()
-    res = run_pipeline(
-        spark, pages, PipelineConfig(), enable_substring=True,
-        parallel_tiers=not serial,
-    )
+    res = run_pipeline(spark, pages, PipelineConfig(), enable_substring=True)
     n_clustered = res.clusters.count()
     wall = time.time() - t0
     res.ckpt.unpersist_all()
@@ -252,7 +246,6 @@ def run_flagship_worker() -> None:
                 "flagship_sec": round(wall, 3),
                 "n_clustered": n_clustered,
                 "cpus": cpus,
-                "parallel_tiers": not serial,
                 "vm_ramp_walls_sec": ramp,
                 "control_after_sec": control_after,
             }

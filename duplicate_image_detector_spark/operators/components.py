@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from duplicate_image_detector_spark.sources.checkpoints import CacheScope
+
 
 def _canonical(edges: DataFrame) -> DataFrame:
     """Undirected edges as (u > v) pairs, self-loops dropped, distinct."""
@@ -195,33 +197,29 @@ def connected_components(
         work_dir,
         0,
     )
-    from pyspark.storagelevel import StorageLevel
-
     prev_sig: tuple[int, int] | None = None
-    cached: list[DataFrame] = []
     truncated = True  # cur reads the round-0 parquet
-    for it in range(max_iter):
-        # persist every round: the star steps reference their input 3-4
-        # times (union + window/groupBy + join) and would otherwise
-        # recompute the whole chain each time.  The checksum action
-        # materializes the cache; parquet round-trips every
-        # ``truncate_every`` rounds keep the *plan* bounded too.
-        nxt = _small_star(_large_star(cur)).persist(StorageLevel.MEMORY_AND_DISK)
-        cached.append(nxt)
-        truncated = (it + 1) % truncate_every == 0
-        if truncated:
-            nxt = _truncate(nxt, work_dir, it + 1)
-        sig = _checksum(nxt)
-        cur = nxt
-        if sig == prev_sig:
-            break
-        prev_sig = sig
-    if not truncated:
-        # the returned frame reads parquet, never a round cache, so every
-        # round cache can be released here
-        cur = _truncate(cur, work_dir, len(cached))
-    for df in cached:
-        df.unpersist()
+    with CacheScope() as rounds:
+        for it in range(max_iter):
+            # persist every round: the star steps reference their input
+            # 3-4 times (union + window/groupBy + join) and would otherwise
+            # recompute the whole chain each time.  The checksum action
+            # (or the truncation write) fills the cache; parquet
+            # round-trips every ``truncate_every`` rounds keep the *plan*
+            # bounded too.
+            nxt = rounds.persist(_small_star(_large_star(cur)), eager=False)
+            truncated = (it + 1) % truncate_every == 0
+            if truncated:
+                nxt = _truncate(nxt, work_dir, it + 1)
+            sig = _checksum(nxt)
+            cur = nxt
+            if sig == prev_sig:
+                break
+            prev_sig = sig
+        if not truncated:
+            # the returned frame reads parquet, never a round cache, so
+            # the scope releases every round cache on the way out
+            cur = _truncate(cur, work_dir, len(rounds))
     # star forest: u -> v (= component min); roots appear only on the v side
     members = cur.select(F.col("u").alias("doc_id"), F.col("v").alias("cluster_id"))
     roots = cur.select(F.col("v").alias("doc_id"), F.col("v").alias("cluster_id")).distinct()

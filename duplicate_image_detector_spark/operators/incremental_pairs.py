@@ -363,14 +363,12 @@ def incremental_near_pairs(
         # shingling behind ``sets`` would execute twice — measured 2x the
         # whole verify wall at 500k docs.  O(|candidate endpoints|) rows.
         # Measured NEGATIVE result (kept for the record): folding this pass
-        # into the verify action by broadcasting the payload (the
-        # plans/pipeline.py PAYLOAD_BROADCAST_PAIRS pattern) won ~0.1 s at
+        # into the verify action by broadcasting the payload won ~0.1 s at
         # sf0.1 but consistently LOST ~1.5 s at 10x corpus size in
         # interleaved A/Bs — the broadcast-stage round-trip grows with the
         # corpus-side scan inside this subtree, while the barrier it saves
-        # is fixed.  The persisted path is the scale-correct default here;
-        # the pipeline keeps the fold because there it also removes a whole
-        # checkpoint-stage barrier.
+        # is fixed.  The batch pipeline's shingle_sets stage is the same
+        # eager payload.
         payload = caches.persist(sig_union.join(sets, "doc_id"))
         return caches.detach(
             caches.persist(verify_pairs(cands, payload, cfg))
@@ -423,8 +421,6 @@ def incremental_update_clusters(
     At scale this is the daily-crawl cluster-maintenance step: the CC
     input is O(|touched members| + |new pairs|), not O(corpus).
     """
-    from pyspark.storagelevel import StorageLevel
-
     from duplicate_image_detector_spark.operators.components import (
         connected_components,
     )
@@ -434,23 +430,22 @@ def incremental_update_clusters(
         .union(new_pairs.select(F.col("id_b").alias("doc_id")))
         .distinct()
     )
-    touched = (
-        old_clusters.join(ends, "doc_id")
-        .select("cluster_id")
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    touched.count()
-    members = old_clusters.join(touched, "cluster_id")
-    star = members.where(F.col("doc_id") != F.col("cluster_id")).select(
-        F.col("cluster_id").alias("id_a"), F.col("doc_id").alias("id_b")
-    )
-    sub = connected_components(
-        new_pairs.select("id_a", "id_b").unionByName(star), work_dir=work_dir
-    )
-    untouched = old_clusters.join(touched, "cluster_id", "left_anti")
-    out = untouched.select("doc_id", "cluster_id").unionByName(
-        sub.select("doc_id", "cluster_id")
-    )
-    touched.unpersist()
-    return out
+    with CacheScope() as scope:
+        # cached for the CC subgraph, which materializes inside the call;
+        # released on every way out, so the returned anti-join recomputes
+        # it lazily
+        touched = scope.persist(
+            old_clusters.join(ends, "doc_id").select("cluster_id").distinct()
+        )
+        members = old_clusters.join(touched, "cluster_id")
+        star = members.where(F.col("doc_id") != F.col("cluster_id")).select(
+            F.col("cluster_id").alias("id_a"), F.col("doc_id").alias("id_b")
+        )
+        sub = connected_components(
+            new_pairs.select("id_a", "id_b").unionByName(star),
+            work_dir=work_dir,
+        )
+        untouched = old_clusters.join(touched, "cluster_id", "left_anti")
+        return untouched.select("doc_id", "cluster_id").unionByName(
+            sub.select("doc_id", "cluster_id")
+        )

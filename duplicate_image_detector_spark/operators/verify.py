@@ -22,23 +22,6 @@ from duplicate_image_detector_spark.config import PipelineConfig
 from duplicate_image_detector_spark.functions.hashing import hamming_col
 from duplicate_image_detector_spark.operators.signatures import jaccard_col
 
-#: candidate-pair count at or below which the batch pipeline BROADCASTS
-#: the endpoint payload (shingle sets + simhash) into the verify joins
-#: instead of materializing the shingle_sets stage as its own pass.
-#: score_pairs joins the payload on both pair sides; Spark's exchange
-#: reuse evaluates a broadcast subtree ONCE per job (verified
-#: empirically: the payload kernel processes each row exactly once), so
-#: the broadcast path folds the whole stage into the verify action — one
-#: checkpoint-stage barrier fewer.  Sizing: endpoint rows carry the full
-#: shingle array (~1-80 KB each); 2 x 20k rows stays well under typical
-#: executor broadcast budgets even at the 80 KB tail.  Above the cap the
-#: pipeline keeps the eager shingle_sets stage, which scales to
-#: arbitrarily large candidate sets.  (incremental_near_pairs measured
-#: the same fold as a NET LOSS at 10x corpus size — its payload pass is
-#: not a stage barrier — and deliberately keeps the persisted path; see
-#: the note there.)
-PAYLOAD_BROADCAST_PAIRS = 20_000
-
 
 def score_pairs(pairs: DataFrame, sig: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """(id_a, id_b) -> + (jaccard double, hamming int).

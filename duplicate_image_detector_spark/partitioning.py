@@ -26,7 +26,13 @@ guard is a no-op — the corpus is never shuffled for it.
 
 from __future__ import annotations
 
+import logging
+
+from py4j.protocol import Py4JError
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame
+
+_log = logging.getLogger(__name__)
 
 _DEFAULT_TARGET_BYTES = 32 << 20  # matches session maxPartitionBytes
 
@@ -36,7 +42,13 @@ def _estimated_bytes(df: DataFrame) -> int | None:
         return int(
             df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         )
-    except Exception:
+    except (Py4JError, PySparkException) as exc:
+        # a streaming plan has no statistics (AnalysisException); a Spark
+        # Connect DataFrame has no JVM plan handle
+        _log.warning(
+            "no plan size estimate (%r): parallelism floor falls back to "
+            "the core count", exc,
+        )
         return None
 
 
@@ -61,7 +73,12 @@ def ensure_min_parallelism(
         return df
     try:
         n = df.rdd.getNumPartitions()
-    except Exception:
+    except (Py4JError, PySparkException) as exc:
+        # neither a streaming nor a Spark Connect DataFrame exposes an RDD
+        _log.warning(
+            "no partition count (%r): input left as it is, not "
+            "repartitioned", exc,
+        )
         return df
     if n >= floor:
         return df

@@ -26,6 +26,7 @@ changes.  Golden-tested under both settings.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -97,7 +98,6 @@ def run_pipeline(
     exclude_exact: bool = False,
     mode: str = "plain",
     table_format: str = "parquet",
-    parallel_tiers: bool = True,
 ) -> PipelineResult:
     """pages(url, html|text, ...) -> PipelineResult.
 
@@ -125,17 +125,6 @@ def run_pipeline(
     in the ``checkpoint_dir``-named namespace (atomic snapshot commits
     instead of marker files); requires the Iceberg runtime jar + catalog —
     see ``sources/iceberg.py``.
-
-    ``parallel_tiers`` (default on) materializes the three independent
-    tiers — exact (sha256 group-by), near (signatures → LSH/SimHash →
-    verify), substring (fingerprints → span verify) — from concurrent
-    driver threads once ``docs`` is down.  Spark schedules jobs from
-    separate threads independently, so the exact and substring tiers'
-    wall hides under the longer near chain instead of adding to it;
-    stage outputs, checkpoint keys, and resume semantics are identical
-    to the serial order (equivalence-tested), this only overlaps
-    per-stage job latency.  Under ``exclude_exact`` the exact tier is a
-    dependency of ``near_docs`` and runs before the parallel region.
     """
     if mode not in ("plain", "integrated"):
         raise ValueError(f"mode must be plain|integrated, got {mode!r}")
@@ -153,7 +142,7 @@ def run_pipeline(
     try:
         return _run_stages(
             ckpt, pages, cfg, checkpoint_dir, use_md5_hash, enable_substring,
-            exclude_exact, mode, table_format, parallel_tiers,
+            exclude_exact, mode, table_format,
         )
     except BaseException:
         # a failed run hands back no result to release later: drop every
@@ -165,7 +154,7 @@ def run_pipeline(
 def _run_stages(
     ckpt: CheckpointManager, pages: DataFrame, cfg: PipelineConfig,
     checkpoint_dir: str | None, use_md5_hash: bool, enable_substring: bool,
-    exclude_exact: bool, mode: str, table_format: str, parallel_tiers: bool,
+    exclude_exact: bool, mode: str, table_format: str,
 ) -> PipelineResult:
     hash_kind = "md5" if use_md5_hash else "poly"
 
@@ -254,8 +243,6 @@ def _run_stages(
         # driver threads (guide §2.6, same pattern as the tier overlap):
         # each arm fills its bucket-stats cache eagerly, and overlapping
         # hides one arm's scheduling latency under the other's.
-        from concurrent.futures import ThreadPoolExecutor
-
         def _lsh_arm() -> DataFrame:
             return lsh_candidate_pairs(signatures, cfg, scope=arms)
 
@@ -301,20 +288,11 @@ def _run_stages(
         return shingle_sets_for(near_docs, cand_ids, cfg, hash_kind=hash_kind)
 
     def _verified(
-        signatures: DataFrame,
-        candidates: DataFrame,
-        shingle_sets: DataFrame,
-        broadcast_payload: bool = False,
+        signatures: DataFrame, candidates: DataFrame, shingle_sets: DataFrame
     ) -> DataFrame:
         sig_for_verify = signatures.select("doc_id", "simhash").join(
             shingle_sets, "doc_id"
         )
-        if broadcast_payload:
-            # small candidate sets: broadcast the endpoint payload so the
-            # verify job's two pair-side joins share ONE evaluation of the
-            # (lazily persisted) shingle-set stage via exchange reuse —
-            # see verify.PAYLOAD_BROADCAST_PAIRS
-            sig_for_verify = F.broadcast(sig_for_verify)
         if mode == "integrated":
             # the reference's integrated mode (ref :1438-1530): exact
             # Jaccard un-thresholded, metadata key = (lang, url host),
@@ -359,44 +337,24 @@ def _run_stages(
             candidates = ckpt.run(
                 "candidates", lambda: _candidates(signatures, arms)
             )
-        from duplicate_image_detector_spark.operators.verify import (
-            PAYLOAD_BROADCAST_PAIRS,
-        )
-
-        # a durable resume counted nothing: count the stage table
-        # (parquet metadata, cheap)
-        n_cand = ckpt.stage_rows.get("candidates")
-        if n_cand is None:
-            n_cand = candidates.count()
-        # verify joins the shingle-set payload on BOTH pair sides.  Small
-        # candidate sets broadcast it: exchange reuse evaluates the
-        # payload once inside the verify job, so the stage itself can stay
-        # a lazy persist (one materialization job fewer).  Large sets keep
-        # the eager stage — two plain joins against a lazily-persisted
-        # payload would race to compute the candidate-docs Python pass
-        # twice.
-        small_cands = n_cand <= PAYLOAD_BROADCAST_PAIRS
-        shingle_sets = ckpt.run(
-            "shingle_sets",
-            lambda: _shingle_sets(candidates),
-            eager=not small_cands,
-        )
+        # verify joins the shingle-set payload on BOTH pair sides: the
+        # eager stage computes the candidate docs' Python pass once, where
+        # two joins against a lazy persist would race to compute it twice
+        shingle_sets = ckpt.run("shingle_sets", lambda: _shingle_sets(candidates))
         verified = ckpt.run(
             "verified",
-            lambda: _verified(
-                signatures,
-                candidates,
-                shingle_sets,
-                broadcast_payload=small_cands,
-            ),
+            lambda: _verified(signatures, candidates, shingle_sets),
         )
         return signatures, verified
 
-    # the parallel region: exact ∥ (signatures → … → verified) ∥ substring.
-    # The branches' sub-DAGs are disjoint above the already-materialized
-    # docs/near_docs stages, so concurrent materialization can never race
-    # to compute a shared uncached subtree; stage names (and thus
-    # checkpoint paths/tables) are disjoint per branch.
+    # the parallel region: exact ∥ (signatures → … → verified) ∥ substring,
+    # each tier from its own driver thread once docs is down.  Spark
+    # schedules jobs from separate threads independently, so the shorter
+    # tiers' wall hides under the near chain.  The branches' sub-DAGs are
+    # disjoint above the already-materialized docs/near_docs stages, so
+    # concurrent materialization can never race to compute a shared
+    # uncached subtree; stage names (and thus checkpoint paths/tables) are
+    # disjoint per branch.
     branches: dict[str, object] = {"near": _near_chain}
     if not exclude_exact:
         branches["exact"] = lambda: ckpt.run(
@@ -413,19 +371,9 @@ def _run_stages(
 
         branches["substring"] = _substring_stage
 
-    if parallel_tiers and len(branches) > 1:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=len(branches)) as pool:
-            futures = {k: pool.submit(fn) for k, fn in branches.items()}
-            results = {k: f.result() for k, f in futures.items()}
-    else:
-        # serial fallback keeps the historical stage order (exact first)
-        results = {
-            k: branches[k]()
-            for k in ("exact", "near", "substring")
-            if k in branches
-        }
+    with ThreadPoolExecutor(max_workers=len(branches)) as pool:
+        futures = {k: pool.submit(fn) for k, fn in branches.items()}
+        results = {k: f.result() for k, f in futures.items()}
 
     if not exclude_exact:
         exact = results["exact"]

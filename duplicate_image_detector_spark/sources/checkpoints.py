@@ -116,8 +116,8 @@ class CheckpointManager:
     # run many pipelines in one session call unpersist_all() once the
     # final result is materialized
     _scope: CacheScope = field(default_factory=CacheScope, repr=False)
-    # run() is called from concurrent tier threads (plans/pipeline.py
-    # parallel_tiers): stage tables/paths are disjoint per stage name, but
+    # run() is called from concurrent tier threads (plans/pipeline.py's
+    # tier region): stage tables/paths are disjoint per stage name, but
     # the metrics buffer + its append-mode table are shared — serialize them
     # (two simultaneous parquet appends to one path share a _temporary
     # staging dir and can clobber each other's task commits)

@@ -114,21 +114,47 @@ def test_cc_distributed_path_releases_round_caches(spark):
 def test_cc_edge_count_hint_paths_identical(spark):
     """edge_count_hint is an upper bound: a small bound proves the driver
     path without a count job, a large/absent bound falls back to
-    counting.  All three must produce the identical labeling."""
-    from pyspark.sql import functions as F
-
+    counting.  All three must produce the identical labeling, and the
+    small bound must submit fewer Spark jobs than no bound."""
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22)], "id_a bigint, id_b bigint"
     )
-    want = sorted(map(tuple, connected_components(edges).collect()))
-    small_hint = sorted(
-        map(tuple, connected_components(edges, edge_count_hint=5).collect())
-    )
-    big_hint = sorted(
-        map(
-            tuple,
-            connected_components(edges, edge_count_hint=10**9).collect(),
-        )
-    )
+    tracker = spark.sparkContext.statusTracker()
+
+    def labels_and_jobs(**kw):
+        before = max(tracker.getJobIdsForGroup(None), default=-1)
+        got = sorted(map(tuple, connected_components(edges, **kw).collect()))
+        return got, max(tracker.getJobIdsForGroup(None)) - before
+
+    want, unhinted_jobs = labels_and_jobs()
+    small_hint, hinted_jobs = labels_and_jobs(edge_count_hint=5)
+    assert hinted_jobs < unhinted_jobs
+    big_hint, _ = labels_and_jobs(edge_count_hint=10**9)
     assert small_hint == want
     assert big_hint == want
+
+
+def test_cc_failed_round_releases_round_caches(spark, monkeypatch):
+    """A distributed CC call that raises mid-loop still releases the round
+    caches it persisted: they belong to a scope closed on every exit."""
+    from duplicate_image_detector_spark.operators import components as C
+
+    df = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 41)], "id_a long, id_b long"
+    )
+    checksum = C._checksum
+    calls = []
+
+    def failing_second_call(edges):
+        calls.append(1)
+        if len(calls) == 2:
+            raise RuntimeError("checksum failed")
+        return checksum(edges)
+
+    monkeypatch.setattr(C, "_checksum", failing_second_call)
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    with pytest.raises(RuntimeError, match="checksum failed"):
+        connected_components(df, small_graph_edges=0)
+    assert len(calls) == 2
+    assert jsc.getPersistentRDDs().size() == before

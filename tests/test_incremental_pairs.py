@@ -3,6 +3,7 @@ full batch near tier, precomputed-signature reuse, and the fan-in cap."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from duplicate_image_detector_spark.config import PipelineConfig
@@ -317,3 +318,27 @@ def test_incremental_wide_delta_layout_output_identical(spark, tiny_corpus):
     a.unpersist()
     b.unpersist()
     docs.unpersist()
+
+
+def test_cluster_update_failure_releases_touched_cache(spark, monkeypatch):
+    """incremental_update_clusters caches the touched cluster ids for its
+    CC subgraph; a CC that raises leaves no cache behind."""
+    from duplicate_image_detector_spark.operators import components
+    from duplicate_image_detector_spark.operators.incremental_pairs import (
+        incremental_update_clusters,
+    )
+
+    old_clusters = spark.createDataFrame(
+        [(1, 1), (2, 1), (5, 5), (6, 5)], "doc_id long, cluster_id long"
+    )
+    new_pairs = spark.createDataFrame([(2, 9)], "id_a long, id_b long")
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("cc failed")
+
+    monkeypatch.setattr(components, "connected_components", boom)
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    with pytest.raises(RuntimeError, match="cc failed"):
+        incremental_update_clusters(old_clusters, new_pairs)
+    assert jsc.getPersistentRDDs().size() == before
